@@ -288,12 +288,18 @@ def _fielded_searcher_for(spark: SparkSession, sf_dir: str) -> IndexSearcher:
     return s
 
 
-def _hits(spark, sf_dir, query, k) -> DataFrame:
-    s = _searcher_for(spark, sf_dir)
-    return s.search(query, k=k).select(
+def _oracle_dtypes(hits: DataFrame) -> DataFrame:
+    """(doc_id long, score double): the oracle's column dtypes (the
+    searcher scores in f32)."""
+    return hits.select(
         F.col("doc_id").cast("long").alias("doc_id"),
         F.col("score").cast("double").alias("score"),
     )
+
+
+def _hits(spark, sf_dir, query, k) -> DataFrame:
+    s = _searcher_for(spark, sf_dir)
+    return _oracle_dtypes(s.search(query, k=k))
 
 
 # ----------------------------------------------------------------------
@@ -1163,7 +1169,7 @@ def _q_span_paycheck(spark, sf):
 
     s = _payload_searcher_for(spark, sf)
     q = SpanPayloadCheckQuery(SpanTermQuery(Q_TERM), (3.0,))
-    return s.search(q, k=K)
+    return _oracle_dtypes(s.search(q, k=K))
 
 
 _ADDED_SEARCHERS: dict[str, IndexSearcher] = {}
@@ -1229,7 +1235,7 @@ def _q_payload_near(spark, sf):
     q = PayloadNearQuery(
         (SpanTermQuery(Q_AND[0]), SpanTermQuery(Q_AND[1])), 0, True, "avg"
     )
-    return s.search(q, k=K)
+    return _oracle_dtypes(s.search(q, k=K))
 
 
 def _q_span_posrange(spark, sf):
@@ -1241,9 +1247,9 @@ def _q_span_posrange(spark, sf):
     )
 
     s = _searcher_for(spark, sf)
-    return s.search(
+    return _oracle_dtypes(s.search(
         SpanPositionRangeQuery(SpanTermQuery(Q_TERM), 2, 10), k=K
-    )
+    ))
 
 
 def _q_boosting(spark, sf):
@@ -1269,7 +1275,7 @@ def _q_terms_filter(spark, sf):
     from lucene_solr_spark.search.query import TermsQuery
 
     s = _searcher_for(spark, sf)
-    return s.search(TermsQuery(("vector", "dup", "window")), k=K)
+    return _oracle_dtypes(s.search(TermsQuery(("vector", "dup", "window")), k=K))
 
 
 def _q_luke(spark, sf):
@@ -4482,7 +4488,7 @@ def _q_frange_filter(spark, sf):
     keep = docs.filter((fval >= 0.80) & (fval <= 0.90)).select("doc_id")
     return (
         hits.join(keep, "doc_id")
-        .select("doc_id", "score")
+        .select("doc_id", F.col("score").cast("double").alias("score"))
         .orderBy(F.desc("score"), "doc_id")
         .limit(K)
     )

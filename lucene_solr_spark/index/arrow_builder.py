@@ -265,3 +265,170 @@ def make_arrow_segment_builder(
         return pa.Table.from_arrays(arrays, schema=schema)
 
     return build_segment
+
+
+def _binary_parts(arr: pa.Array) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """-> (data buffer as uint8, start offset per row, length per row);
+    null rows get length 0."""
+    offs = np.frombuffer(
+        arr.buffers()[1], np.int32, len(arr) + 1, arr.offset * 4
+    ).astype(np.int64)
+    data_buf = arr.buffers()[2]
+    data = (
+        np.frombuffer(data_buf, np.uint8) if data_buf is not None
+        else np.empty(0, np.uint8)
+    )
+    lens = np.diff(offs)
+    if arr.null_count:
+        lens[~arr.is_valid().to_numpy(zero_copy_only=False)] = 0
+    return data, offs[:-1], lens
+
+
+def _gather(src: np.ndarray, starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Concatenate the byte ranges src[starts[i] : starts[i] + lens[i]]."""
+    total = int(lens.sum())
+    dst = np.cumsum(lens) - lens
+    return src[np.repeat(starts - dst, lens) + np.arange(total)]
+
+
+def _binary_array(
+    data: np.ndarray, row_lens: np.ndarray, bounds: np.ndarray,
+    valid: np.ndarray | None = None,
+) -> pa.Array:
+    """Binary array whose value i is data[row range bounds[i]:bounds[i+1]]
+    (`data` holds the rows' bytes back to back)."""
+    offs = np.zeros(len(row_lens) + 1, np.int64)
+    np.cumsum(row_lens, out=offs[1:])
+    validity = None
+    if valid is not None and not valid.all():
+        validity = pa.py_buffer(np.packbits(valid, bitorder="little"))
+    return pa.Array.from_buffers(
+        pa.binary(), len(bounds) - 1,
+        [validity, pa.py_buffer(offs[bounds].astype(np.int32)),
+         pa.py_buffer(data)],
+    )
+
+
+def make_arrow_merger(seg_bases: dict[int, int], codec: str = "vbyte"):
+    """Returns the applyInArrow function merging ONE (shard, bucket)
+    group of segment posting rows into shard posting rows.
+
+    Segments are doc-disjoint ascending runs, so merging a (term, part)
+    is an ordered concatenation of its segment rows (sorted by g): only
+    each row's head is rewritten — its first doc delta becomes
+    `first global docID - previous row's last global docID` (absolute
+    for the run's first row), via codec.rebase_heads — and every byte
+    stream and block list is concatenated with offsets shifted. One
+    columnar pass per group: no per-term Python."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from lucene_solr_spark.index.builder import POSTINGS_SCHEMA
+    from lucene_solr_spark.index.codec import rebase_heads
+
+    schema = to_arrow_schema(POSTINGS_SCHEMA)
+    base_of_g = np.zeros(max(seg_bases, default=-1) + 1, np.int64)
+    for g, base in seg_bases.items():
+        base_of_g[g] = base
+
+    def merge(tbl: pa.Table) -> pa.Table:
+        if pa.cpu_count() != 1:
+            pa.set_cpu_count(1)
+        if tbl.num_rows == 0:
+            return schema.empty_table()
+        tbl = tbl.sort_by(
+            [("term", "ascending"), ("part", "ascending"), ("g", "ascending")]
+        ).combine_chunks()
+        n = tbl.num_rows
+
+        def col(name):
+            return tbl.column(name).chunk(0)
+
+        def flat(name):
+            """A list column's values, concatenated (a copy)."""
+            return col(name).flatten().to_numpy().astype(np.int64)
+
+        terms, parts = col("term"), col("part")
+        new_run = np.ones(n, bool)
+        if n > 1:
+            new_run[1:] = (
+                pc.not_equal(terms[1:], terms[:-1]).to_numpy(zero_copy_only=False)
+                | pc.not_equal(parts[1:], parts[:-1]).to_numpy(zero_copy_only=False)
+            )
+        run_starts = np.flatnonzero(new_run)
+        bounds = np.append(run_starts, n)
+        run_of_row = np.cumsum(new_run) - 1
+        base = base_of_g[col("g").to_numpy()]
+        blast = flat("block_last")
+        nblk = pc.list_value_length(col("block_last")).to_numpy().astype(np.int64)
+        blk_first = np.cumsum(nblk) - nblk
+        blast += np.repeat(base, nblk)
+        # each row's first delta is relative to the previous row's last
+        # global docID within the run, absolute at the run's head
+        prev_last = np.zeros(n, np.int64)
+        prev_last[1:] = blast[blk_first[1:] - 1]
+        prev_last[new_run] = 0
+
+        doc_data, doc_starts, doc_lens = _binary_parts(col("doc_enc"))
+        heads, head_lens, old_head_lens = rebase_heads(
+            doc_data, doc_starts, base - prev_last, codec
+        )
+        head_starts = len(doc_data) + np.cumsum(head_lens) - head_lens
+        new_doc_lens = doc_lens - old_head_lens + head_lens
+        doc_bytes = _gather(
+            np.concatenate([doc_data, heads]),
+            np.column_stack([head_starts, doc_starts + old_head_lens]).ravel(),
+            np.column_stack([head_lens, doc_lens - old_head_lens]).ravel(),
+        )
+
+        def concat_col(name):
+            """Byte-concat each run's rows (null if all are null)
+            -> (array, byte length per row)."""
+            arr = col(name)
+            data, starts, lens = _binary_parts(arr)
+            valid = None
+            if arr.null_count:
+                valid = np.logical_or.reduceat(
+                    arr.is_valid().to_numpy(zero_copy_only=False), run_starts
+                )
+            out = _binary_array(_gather(data, starts, lens), lens, bounds, valid)
+            return out, lens
+
+        tf_enc, tf_lens = concat_col("tf_enc")
+
+        def run_acc(lens):
+            """Byte offset of each row within its run's output."""
+            acc = np.cumsum(lens) - lens
+            return acc - acc[run_starts][run_of_row]
+
+        bdoff = flat("block_doc_off")
+        shift = np.repeat(head_lens - old_head_lens, nblk)
+        shift[blk_first] = 0
+        bdoff += np.repeat(run_acc(new_doc_lens), nblk) + shift
+        btoff = flat("block_tf_off")
+        btoff += np.repeat(run_acc(tf_lens), nblk)
+        blk_bounds = np.append(blk_first, len(blast))[bounds]
+
+        def list_col(values, dtype):
+            return pa.ListArray.from_arrays(
+                pa.array(blk_bounds.astype(np.int32)), pa.array(values.astype(dtype))
+            )
+
+        arrays = [
+            col("shard").take(run_starts).cast(pa.int32()),
+            terms.take(run_starts),
+            parts.take(run_starts).cast(pa.int32()),
+            pa.array(np.add.reduceat(col("df").to_numpy(), run_starts)),
+            pa.array(np.add.reduceat(col("cf").to_numpy(), run_starts)),
+            _binary_array(doc_bytes, new_doc_lens, bounds),
+            tf_enc,
+            list_col(blast, np.int64),
+            list_col(bdoff, np.int32),
+            list_col(btoff, np.int32),
+            list_col(flat("block_max_tf"), np.int32),
+            list_col(flat("block_max_norm"), np.int32),
+            concat_col("pos_enc")[0],
+            concat_col("pay_enc")[0],
+        ]
+        return pa.Table.from_arrays(arrays, schema=schema)
+
+    return merge

@@ -3,13 +3,17 @@
 Mirrors the reference's indexing lifecycle (SURVEY.md §3.4) Spark-first:
 
 - DWPT / flush  (index/DocumentsWriterPerThread.java, DefaultIndexingChain.java:277)
-    -> one `applyInPandas` group per SEGMENT: tokenize vectorized, build
-       sorted (term, doc) postings with numpy, encode 128-entry VByte
-       delta blocks + per-block max metadata in ONE vectorized pass.
+    -> one `applyInArrow` group per SEGMENT (index/arrow_builder.py;
+       multi-field builds use the `applyInPandas` builder below):
+       tokenize JVM-side, build sorted (term, doc) postings with numpy,
+       encode 128-entry delta blocks + per-block max metadata in ONE
+       vectorized pass.
 - SegmentMerger docBase remap  (index/SegmentMerger.java:74-130, MergeState.java:129-142)
     -> segments are doc-disjoint ascending runs, so the shard-level merge
-       is an ordered CONCATENATION: only each run's first varint (absolute
-       docID) is rewritten; no decode/re-encode of posting bodies.
+       is an ordered CONCATENATION, one columnar `applyInArrow` pass per
+       (shard, bucket) group: only each run's head (first varint, or
+       first FOR block) is rewritten; no decode/re-encode of posting
+       bodies.
 - TieredMergePolicy skew handling  (index/TieredMergePolicy.java:45-48)
     -> hot terms (large per-segment df) are split into doc-range PARTS so
        no single reducer or row ever holds an unbounded posting list;
@@ -71,7 +75,7 @@ class _PhaseTimer:
             self.t = now
 
 from lucene_solr_spark.functions.smallfloat import encode_norm
-from lucene_solr_spark.index.codec import encode_posting_lists, vbyte_encode
+from lucene_solr_spark.index.codec import encode_posting_lists
 
 
 # Term = (field, bytes) (index/Term.java:36). Internally a non-default
@@ -382,142 +386,6 @@ def _make_segment_builder(
     return build_segment
 
 
-def _read_first_varint(buf: bytes) -> tuple[int, int]:
-    """Decode the first VByte value -> (value, nbytes)."""
-    val = 0
-    shift = 0
-    for i, byte in enumerate(buf):
-        val |= (byte & 0x7F) << shift
-        if not byte & 0x80:
-            return val, i + 1
-        shift += 7
-    raise ValueError("truncated varint")
-
-
-def _encode_varint(v: int) -> bytes:
-    arr, _ = vbyte_encode(np.array([v], np.uint64))
-    return arr.tobytes()
-
-
-def _make_merger(
-    seg_bases: dict[int, int], segs_per_shard: int, codec: str = "vbyte"
-):
-    """Merge segment posting runs -> shard posting rows (ordered concat).
-
-    Rows of one (shard, bucket) group, many terms at once. For each
-    (term, part): rebase each segment run to global docIDs (the run's
-    first delta becomes `global_doc0 - prev_run_last`), then byte-
-    concat. vbyte: only the head varint is rewritten; for: the run's
-    FIRST block is decoded/re-encoded (its bit width may change), the
-    rest concatenates untouched."""
-    from lucene_solr_spark.index.codec import for_decode_block, for_encode_block
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return pd.DataFrame(columns=[f.name for f in POSTINGS_SCHEMA.fields])
-        pdf = pdf.sort_values(["term", "part", "g"], kind="mergesort")
-        out = {name: [] for name in (
-            "shard", "term", "part", "df", "cf", "doc_enc", "tf_enc",
-            "block_last", "block_doc_off", "block_tf_off", "block_max_tf",
-            "block_max_norm", "pos_enc", "pay_enc",
-        )}
-        terms = pdf["term"].to_numpy()
-        parts = pdf["part"].to_numpy()
-        gs = pdf["g"].to_numpy()
-        doc_encs = pdf["doc_enc"].to_numpy()
-        tf_encs = pdf["tf_enc"].to_numpy()
-        b_last = pdf["block_last"].to_numpy()
-        b_doff = pdf["block_doc_off"].to_numpy()
-        b_toff = pdf["block_tf_off"].to_numpy()
-        b_mtf = pdf["block_max_tf"].to_numpy()
-        b_mnorm = pdf["block_max_norm"].to_numpy()
-        pos_encs = pdf["pos_enc"].to_numpy() if "pos_enc" in pdf else None
-        pay_encs = pdf["pay_enc"].to_numpy() if "pay_enc" in pdf else None
-        dfs = pdf["df"].to_numpy()
-        cfs = pdf["cf"].to_numpy()
-
-        i = 0
-        n = len(pdf)
-        while i < n:
-            j = i
-            while j < n and terms[j] == terms[i] and parts[j] == parts[i]:
-                j += 1
-            # merge runs [i, j) of one (term, part)
-            doc_parts: list[bytes] = []
-            tf_parts: list[bytes] = []
-            pos_parts: list[bytes] = []
-            pay_parts: list[bytes] = []
-            blast_parts, bdoff_parts, btoff_parts = [], [], []
-            bmtf_parts, bmnorm_parts = [], []
-            doc_bytes_acc = 0
-            tf_bytes_acc = 0
-            prev_last_global = None
-            for r in range(i, j):
-                base = seg_bases[int(gs[r])]
-                enc = bytes(doc_encs[r])
-                if codec == "for":
-                    bdo0 = np.asarray(b_doff[r], np.int64)
-                    b0_end = int(bdo0[1]) if len(bdo0) > 1 else len(enc)
-                    vals = for_decode_block(enc[:b0_end]).astype(np.int64)
-                    global0 = int(vals[0]) + base
-                    delta0 = (
-                        global0
-                        if prev_last_global is None
-                        else global0 - prev_last_global
-                    )
-                    vals[0] = delta0
-                    head = for_encode_block(vals.astype(np.uint64))
-                    shift = len(head) - b0_end
-                    doc_parts.append(head + enc[b0_end:])
-                else:
-                    local0, nb_old = _read_first_varint(enc)
-                    global0 = local0 + base
-                    delta0 = (
-                        global0
-                        if prev_last_global is None
-                        else global0 - prev_last_global
-                    )
-                    head = _encode_varint(delta0)
-                    shift = len(head) - nb_old
-                    doc_parts.append(head + enc[nb_old:])
-                tf_parts.append(bytes(tf_encs[r]))
-                if pos_encs is not None and pos_encs[r] is not None:
-                    # positions are doc-local deltas: plain concat, no rebase
-                    pos_parts.append(bytes(pos_encs[r]))
-                if pay_encs is not None and pay_encs[r] is not None:
-                    # payloads are raw <f4 aligned with pos: plain concat
-                    pay_parts.append(bytes(pay_encs[r]))
-                blast = np.asarray(b_last[r], np.int64) + base
-                bdoff = np.asarray(b_doff[r], np.int64).copy()
-                bdoff[1:] += shift
-                blast_parts.append(blast)
-                bdoff_parts.append(bdoff + doc_bytes_acc)
-                btoff_parts.append(np.asarray(b_toff[r], np.int64) + tf_bytes_acc)
-                bmtf_parts.append(np.asarray(b_mtf[r], np.int32))
-                bmnorm_parts.append(np.asarray(b_mnorm[r], np.int32))
-                doc_bytes_acc += len(doc_parts[-1])
-                tf_bytes_acc += len(tf_parts[-1])
-                prev_last_global = int(blast[-1])
-            out["shard"].append(int(gs[i]) // segs_per_shard)
-            out["term"].append(terms[i])
-            out["part"].append(int(parts[i]))
-            out["df"].append(int(dfs[i:j].sum()))
-            out["cf"].append(int(cfs[i:j].sum()))
-            out["doc_enc"].append(b"".join(doc_parts))
-            out["tf_enc"].append(b"".join(tf_parts))
-            out["pos_enc"].append(b"".join(pos_parts) if pos_parts else None)
-            out["pay_enc"].append(b"".join(pay_parts) if pay_parts else None)
-            out["block_last"].append(np.concatenate(blast_parts))
-            out["block_doc_off"].append(np.concatenate(bdoff_parts).astype(np.int32))
-            out["block_tf_off"].append(np.concatenate(btoff_parts).astype(np.int32))
-            out["block_max_tf"].append(np.concatenate(bmtf_parts))
-            out["block_max_norm"].append(np.concatenate(bmnorm_parts))
-            i = j
-        return pd.DataFrame(out)
-
-    return merge
-
-
 NORMS_SCHEMA = StructType(
     [
         StructField("shard", IntegerType()),
@@ -795,18 +663,25 @@ def build_index(
         F.pmod(F.xxhash64("term", "part"), F.lit(cfg.merge_buckets)).cast("int"),
     ).withColumn("shard", (F.col("g") / cfg.segs_per_shard).cast("int"))
 
-    merged = bucketed.groupBy("shard", "bucket").applyInPandas(
-        _make_merger(bases, cfg.segs_per_shard, cfg.codec), POSTINGS_SCHEMA
+    from lucene_solr_spark.index.arrow_builder import make_arrow_merger
+
+    merged = bucketed.select(
+        "shard", "bucket", "term", "part", "g", "df", "cf", "doc_enc",
+        "tf_enc", "block_last", "block_doc_off", "block_tf_off",
+        "block_max_tf", "block_max_norm", "pos_enc", "pay_enc",
+    ).groupBy("shard", "bucket").applyInArrow(
+        make_arrow_merger(bases, cfg.codec), POSTINGS_SCHEMA
     )
     # Range-partition by (shard, term): write parallelism is decoupled
     # from shard count (a shard's terms span several contiguous-range
     # files) while keeping term-sorted files so parquet min/max pruning
     # still short-circuits term lookups (the FST .tip analog).
-    # repartitionByRange needs a sampling pass — persist `merged` so the
-    # expensive merge kernel runs once, not twice.
-    from pyspark import StorageLevel
-
-    merged = merged.persist(StorageLevel.MEMORY_AND_DISK)
+    # repartitionByRange samples `merged` in a separate job, so the
+    # merge kernel runs twice. That is deliberate: the columnar kernel
+    # is cheap, while caching `merged` would pin the merge stage at
+    # spark.sql.shuffle.partitions Python tasks (AQE does not coalesce
+    # a cached plan's partitions) — a fixed per-task cost that exceeds
+    # the second run.
     n_write = max(cfg.n_shards, spark.sparkContext.defaultParallelism)
     (
         merged.repartitionByRange(n_write, "shard", "term")
@@ -815,7 +690,6 @@ def build_index(
         .partitionBy("shard")
         .parquet(os.path.join(out_dir, "postings"))
     )
-    merged.unpersist()
     _pt.mark("merge_write")
 
     # ---- global term stats (df/cf across shards) ----

@@ -179,6 +179,73 @@ def for_encode_blocks(
     return out.tobytes(), offs
 
 
+def for_decode_blocks(
+    buf: np.ndarray, offs: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """Decode MANY blocks in one vectorized pass -> (values, counts).
+
+    `buf` is a uint8 array, `offs` the byte offset of each block's
+    header; values come back concatenated in block order."""
+    offs = np.asarray(offs, np.int64)
+    w = buf[offs].astype(np.int64)
+    counts = buf[offs + 1].astype(np.int64) + 1
+    body = (counts * w + 7) // 8
+    body_start = np.cumsum(body) - body
+    src = np.repeat(offs + 2 - body_start, body) + np.arange(int(body.sum()))
+    bits = np.unpackbits(buf[src])
+    blk = np.repeat(np.arange(len(offs)), counts)
+    j = np.arange(int(counts.sum())) - np.repeat(np.cumsum(counts) - counts, counts)
+    wv = w[blk]
+    bit0 = body_start[blk] * 8 + j * wv
+    vals = np.zeros(len(blk), np.uint64)
+    for k in range(int(w.max(initial=0))):
+        m = k < wv
+        vals[m] = (vals[m] << np.uint64(1)) | bits[bit0[m] + k].astype(np.uint64)
+    return vals, counts
+
+
+def _vbyte_read_first(
+    buf: np.ndarray, starts: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """First VByte value at each byte offset -> (values, nbytes)."""
+    vals = np.zeros(len(starts), np.uint64)
+    nbytes = np.zeros(len(starts), np.int64)
+    live = np.arange(len(starts))
+    shift = 0
+    while len(live):
+        byte = buf[starts[live] + nbytes[live]]
+        vals[live] |= (byte & 0x7F).astype(np.uint64) << np.uint64(shift)
+        nbytes[live] += 1
+        live = live[(byte & 0x80) != 0]
+        shift += 7
+    return vals, nbytes
+
+
+def rebase_heads(
+    buf: np.ndarray, starts: np.ndarray, add: np.ndarray, codec: str = "vbyte"
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Add `add[i]` to the first doc delta of the stream at byte
+    `starts[i]` of `buf` and re-encode that stream's head — its first
+    varint (vbyte) or its first block, whose bit width may change (for).
+    The rest of each stream is untouched.
+
+    Returns (new heads concatenated as uint8, new head byte lengths,
+    old head byte lengths)."""
+    starts = np.asarray(starts, np.int64)
+    add = np.asarray(add, np.int64)
+    if codec == "for":
+        vals, counts = for_decode_blocks(buf, starts)
+        old_lens = 2 + (counts * buf[starts].astype(np.int64) + 7) // 8
+        first = np.cumsum(counts) - counts
+        vals[first] = (vals[first].astype(np.int64) + add).astype(np.uint64)
+        stream, offs = for_encode_blocks(vals, first, len(vals))
+        new_lens = np.diff(np.append(offs, len(stream)))
+        return np.frombuffer(stream, np.uint8), new_lens, old_lens
+    vals, old_lens = _vbyte_read_first(buf, starts)
+    heads, new_lens = vbyte_encode((vals.astype(np.int64) + add).astype(np.uint64))
+    return heads, new_lens, old_lens
+
+
 def for_decode_stream(buf: bytes, n_values: int) -> np.ndarray:
     """Decode a concatenation of FOR blocks -> uint64 values."""
     vals = np.empty(n_values, np.uint64)

@@ -78,10 +78,12 @@ def delete_expired(
     (deleteByQuery "expire_at:[* TO NOW]",
     DocExpirationUpdateProcessorFactory.java:328). Tombstones are
     written straight from the filtered DataFrame — executor-bound at
-    any corpus size. Keys already tombstoned by a prior sweep are
-    anti-joined away first, so repeated sweeps over the same stored
-    frame are idempotent (the tombstone table does not grow) and the
-    return value is the number of NEWLY expired keys this sweep."""
+    any corpus size. Keys already tombstoned at the current watermark
+    (by a prior sweep) are anti-joined away first, so repeated sweeps
+    over the same stored frame are idempotent (the tombstone table
+    does not grow) and the return value is the number of NEWLY
+    expired keys this sweep. A key tombstoned at an older watermark
+    (an updated doc) is tombstoned again."""
     import json
 
     from lucene_solr_spark.index.deletes import _current_total_docs
@@ -101,9 +103,17 @@ def delete_expired(
     )
     tomb_dir = os.path.join(index_dir, "tombstones")
     if os.path.exists(tomb_dir):
-        tomb = tomb.join(
-            spark.read.parquet(tomb_dir).select("key"), "key", "left_anti"
+        # a tombstone kills only doc versions below its watermark, so a
+        # key is covered only by one at the current watermark or above
+        # (an updated doc's live version sits above its old tombstone)
+        covered = (
+            spark.read.parquet(tomb_dir)
+            .groupBy("key")
+            .agg(F.max("wm").alias("wm"))
+            .where(F.col("wm") >= F.lit(wm))
+            .select("key")
         )
+        tomb = tomb.join(covered, "key", "left_anti")
     n = tomb.count()
     if n:
         tomb.write.mode("append").parquet(tomb_dir)

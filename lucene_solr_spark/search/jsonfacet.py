@@ -30,15 +30,22 @@ DuckDB oracle can replay the whole tree.
 Semantics pinned to the reference:
 - terms buckets sort count desc, tie bucket value asc ("index"),
   `limit` buckets kept PER PARENT bucket (FacetFieldProcessor
-  bucket-limit); limit defaults 10; sort "index" supported.
+  bucket-limit); limit defaults 10, a negative limit means unlimited
+  (FacetField's `limit >= 0 ? limit : Integer.MAX_VALUE`); sort
+  "index" supported.
 - query facets have one bucket, named by the node key, matching rows
   filtered by the `q` expression (FacetQuery).
 - range facets bucket [start, start+gap), ... up to end, lower edge
   inclusive (FacetRange default include); bucket value = the range
-  start, like the reference's `val`.
+  start, like the reference's `val`. Only non-empty buckets are
+  emitted: the reference's range mincount defaults to 0 and lists a
+  zero-count bucket for every [start, start+gap) slot, while here range
+  nodes share the terms default mincount=1 — a documented deviation.
 - stats: count / sum / avg / min / max / unique over a column
   (AggValueSource; unique is exact countDistinct here — the
   reference's hll/unique approximation is a documented deviation).
+  Stat names `count`, `facet` and `bucket_path` are reserved for the
+  output columns and raise ValueError.
 
 Scale shape: every level is a hash aggregate keyed by the bucket-path
 prefix — the child's shuffle key extends the parent's, so AQE can
@@ -58,6 +65,7 @@ from dataclasses import dataclass, field as dc_field
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+_RESERVED = ("count", "facet", "bucket_path")  # output column names
 _STAT_PAT = re.compile(r"^\s*(count|sum|avg|min|max|unique)\s*\(\s*([\w.]*)\s*\)\s*$")
 
 
@@ -108,6 +116,11 @@ def _parse(name: str, spec: dict) -> _Node:
             m = _STAT_PAT.match(sub)
             if not m:
                 raise ValueError(f"unparseable stat {sub!r} at {name!r}")
+            if key in _RESERVED:
+                raise ValueError(
+                    f"stat name {key!r} at {name!r} is reserved for an "
+                    "output column"
+                )
             fn, col = m.group(1), m.group(2)
             if fn != "count" and not col:
                 raise ValueError(f"{fn} needs a column at {name!r}")
@@ -231,7 +244,7 @@ def json_facet(df: DataFrame, request: dict | None = None,
         )
         if node.kind in ("terms", "range") and node.mincount > 1:
             agg = agg.where(F.col("_cnt") >= node.mincount)
-        if node.kind == "terms":
+        if node.kind == "terms" and node.limit >= 0:
             order = (
                 [F.desc("_cnt"), F.asc(vcol)]
                 if node.sort == "count" else [F.asc(vcol)]

@@ -13,6 +13,7 @@ from lucene_solr_spark.index.codec import (
     decode_posting_list,
     encode_posting_lists,
     for_decode_block,
+    for_decode_blocks,
     for_decode_stream,
     for_encode_block,
     for_encode_blocks,
@@ -36,6 +37,22 @@ def test_for_stream_roundtrip():
     stream, offs = for_encode_blocks(vals, starts, len(vals))
     assert np.array_equal(for_decode_stream(stream, len(vals)), vals)
     assert offs[0] == 0 and (np.diff(offs) > 0).all()
+
+
+def test_for_decode_blocks_matches_per_block_decode():
+    rng = np.random.RandomState(5)
+    counts = rng.randint(1, 257, size=40)
+    starts = np.cumsum(counts) - counts
+    n = int(counts.sum())
+    vals = (rng.randint(0, 2**20, size=n) >> rng.randint(0, 20, size=n))
+    vals = vals.astype(np.uint64)
+    stream, offs = for_encode_blocks(vals, starts, len(vals))
+    buf = np.frombuffer(stream, np.uint8)
+    pick = offs[::3]
+    got, counts = for_decode_blocks(buf, pick)
+    want = [for_decode_block(stream[o:]) for o in pick]
+    assert np.array_equal(counts, [len(w) for w in want])
+    assert np.array_equal(got, np.concatenate(want))
 
 
 @pytest.mark.parametrize("codec", ["vbyte", "for"])

@@ -97,3 +97,45 @@ def test_delete_expired_tombstones(spark, tmp_path):
     keys2 = {r.key for r in
              s2.search_with_keys(TermQuery("table"), k=10).collect()}
     assert keys2 == {1, 3}
+
+
+def test_delete_expired_after_update(spark, tmp_path):
+    """An updated doc (tombstoned at an older watermark, live version
+    re-added above it) is still tombstoned when it later expires."""
+    from lucene_solr_spark.index.builder import IndexConfig, build_index
+    from lucene_solr_spark.index.deletes import update_documents
+    from lucene_solr_spark.index.expiration import (
+        compute_expiration,
+        delete_expired,
+    )
+    from lucene_solr_spark.search.query import TermQuery
+    from lucene_solr_spark.search.searcher import IndexSearcher
+
+    ix = str(tmp_path / "exupd")
+    build_index(
+        spark,
+        spark.createDataFrame(
+            [(1, "table scan"), (2, "table merge")], "doc_id long, text string"
+        ),
+        ix,
+        IndexConfig(n_shards=2, segs_per_shard=1),
+    )
+    update_documents(
+        spark, ix,
+        spark.createDataFrame([(2, "table sort")], "doc_id long, text string"),
+        batch_id=1,
+    )
+    stored = compute_expiration(
+        spark.createDataFrame(
+            [(1, "table scan", "+1DAY"), (2, "table sort", "-1DAY")],
+            "doc_id long, text string, _ttl_ string",
+        ),
+        NOW,
+    )
+    assert delete_expired(spark, ix, stored, NOW) == 1
+    s = IndexSearcher.open(spark, ix)
+    keys = {r.key for r in
+            s.search_with_keys(TermQuery("table"), k=10).collect()}
+    assert keys == {1}
+    assert s.search(TermQuery("sort"), k=10).count() == 0
+    assert delete_expired(spark, ix, stored, NOW) == 0

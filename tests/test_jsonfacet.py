@@ -170,3 +170,32 @@ def test_mincount_prefix_missing_allbuckets(spark):
     assert set(got4) == {("facet", "en"), ("facet", "__all__")}
     assert got4[("facet", "__all__")].asDict()["count"] == 4
     assert got4[("facet", "__all__")].s == 110.0
+
+
+def test_negative_limit_is_unlimited(docs):
+    from lucene_solr_spark.search.jsonfacet import json_facet
+
+    got = _rows(json_facet(docs, {"type": "terms", "field": "source",
+                                  "limit": -1}))
+    assert set(got) == {("facet", "a"), ("facet", "b"), ("facet", "c")}
+    assert got[("facet", "a")].asDict()["count"] == 4
+
+
+def test_reserved_stat_names_rejected(docs):
+    from lucene_solr_spark.search.jsonfacet import json_facet
+
+    for alias in ("count", "facet", "bucket_path"):
+        with pytest.raises(ValueError, match="reserved"):
+            json_facet(docs, {"type": "terms", "field": "lang",
+                              "facet": {alias: "sum(n)"}})
+
+
+def test_range_facet_emits_no_empty_buckets(docs):
+    """Documented deviation: a [start, start+gap) slot with no docs
+    yields no bucket (the reference lists it with count 0)."""
+    from lucene_solr_spark.search.jsonfacet import json_facet
+
+    req = {"type": "range", "field": "n", "start": 0, "end": 200,
+           "gap": 50}
+    got = _rows(json_facet(docs, req))
+    assert set(got) == {("facet", "0"), ("facet", "50")}

@@ -1,7 +1,8 @@
 """Driver emulator: run every queries() entry through Spark AND its
 oracle_sql() through DuckDB at sf0.01, compare row count, column names,
-and order-insensitive values (sorted by all columns). Mirrors the real
-driver's CORRECTNESS gate so regressions surface before a round ends.
+column dtype families and order-insensitive values (sorted by all
+columns). Mirrors the real driver's CORRECTNESS gate, whose result hash
+is dtype-sensitive, so regressions surface before a round ends.
 
 Usage: python tools/check_entry.py [sf_dir] [query_name ...]
 """
@@ -25,6 +26,48 @@ def norm_cell(v):
             return "nan"
         return f"{v:.10g}"
     return str(v)
+
+
+_INT_TYPES = {
+    "tinyint", "smallint", "int", "integer", "bigint", "hugeint",
+    "utinyint", "usmallint", "uinteger", "ubigint", "uhugeint",
+}
+
+
+def dtype_family(t: str) -> str:
+    """Engine-neutral family of a Spark simpleString or DuckDB type
+    name: integer widths collapse to 'int', but float (f32) and double
+    stay distinct, so an f32 column never matches a DOUBLE oracle."""
+    t = t.strip().lower()
+    if t.endswith("[]"):
+        return f"array<{dtype_family(t[:-2])}>"
+    if t.startswith("array<") and t.endswith(">"):
+        return f"array<{dtype_family(t[6:-1])}>"
+    if t in _INT_TYPES:
+        return "int"
+    if t in ("float", "real", "float4"):
+        return "float32"
+    if t in ("double", "float8"):
+        return "float64"
+    if t.startswith("decimal"):
+        return "decimal"
+    if t == "string" or t.startswith("varchar"):
+        return "string"
+    if t.startswith("timestamp"):
+        return "timestamp"
+    if t.startswith("struct"):
+        return "struct"
+    return t
+
+
+def dtype_mismatches(spark_dtypes, duck_cols, duck_types):
+    """[(column, spark type, duckdb type)] whose families differ."""
+    duck = {c: str(t) for c, t in zip(duck_cols, duck_types)}
+    return [
+        (c, t, duck[c])
+        for c, t in spark_dtypes
+        if c in duck and dtype_family(t) != dtype_family(duck[c])
+    ]
 
 
 def rows_key(rows, cols):
@@ -80,11 +123,15 @@ def main():
             ok_cols = sorted(spark_cols) == sorted(duck_cols)
             ok_count = len(spark_rows) == len(duck_rows)
             ok_vals = rows_key(spark_rows, spark_cols) == rows_key(duck_rows, duck_cols)
-            ok = ok_cols and ok_count and ok_vals
+            bad_types = dtype_mismatches(df.dtypes, duck_cols, rel.types)
+            ok_types = not bad_types
+            ok = ok_cols and ok_count and ok_vals and ok_types
             n_pass += ok
             n_fail += not ok
             status = "PASS" if ok else "FAIL"
-            print(f"  {name:28s} {status} rows={len(spark_rows)}/{len(duck_rows)} cols={ok_cols} vals={ok_vals}")
+            print(f"  {name:28s} {status} rows={len(spark_rows)}/{len(duck_rows)} cols={ok_cols} types={ok_types} vals={ok_vals}")
+            for col, st, dt in bad_types:
+                print(f"    dtype {col}: spark {st} vs duckdb {dt}")
             if not ok:
                 print(f"    spark cols: {spark_cols}  duck cols: {duck_cols}")
                 sk = rows_key(spark_rows, spark_cols)
